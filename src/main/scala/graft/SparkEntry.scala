@@ -1287,7 +1287,7 @@ object SparkEntry {
     // Hand-written data-page scan (sources/ParquetPages.scala): the fact
     // slice is written as ZSTD parquet with small pages, then BOTH
     // columns are read back through the repo's own page walk —
-    // PageHeader thrift, zstd frame decode (RFC 8878, our decoder),
+    // PageHeader thrift, zstd frame decode (RFC 8878, zstd-jni),
     // RLE/bit-packed definition levels, PLAIN + RLE_DICTIONARY values —
     // and aggregated. The oracle recomputes the same aggregates from the
     // source table, so any bit error anywhere in the chain flips a sum.
@@ -5668,7 +5668,7 @@ object SparkEntry {
     }),
     // xz round-trip per doc: stored-LZMA2 container encode (size is a
     // closed form the oracle recomputes, varint widths included) and
-    // the full decode path — header/index/footer CRCs, LZMA2 chunk
+    // the xz-java decode path — header/index/footer CRCs, LZMA2 chunk
     // walk, block check. The recovered text is the compared value.
     "xz_roundtrip" -> ((s, dir) => {
       import s.implicits._
@@ -5683,11 +5683,10 @@ object SparkEntry {
         .toDF("doc_id", "xz_len", "txt")
         .orderBy("doc_id")
     }),
-    // zstd round-trip per doc BOTH ways: the real compressor (greedy
-    // LZ + predefined-FSE sequence coding, XXH64 checksum) and the
-    // stored mode whose size is a closed form the oracle recomputes.
-    // The recovered text is the compared value, so any FSE state,
-    // bitstream or offset-history bug surfaces as a value mismatch.
+    // zstd round-trip per doc BOTH ways: the zstd-jni compressor and
+    // the stored mode whose size is a closed form the oracle
+    // recomputes. The recovered text is the compared value, so any
+    // framing or checksum bug surfaces as a value mismatch.
     "zstd_roundtrip" -> ((s, dir) => {
       import s.implicits._
       import java.nio.charset.StandardCharsets.UTF_8
@@ -5729,7 +5728,7 @@ object SparkEntry {
     // LZ4 frame round-trip per doc: stored-mode size is a closed form
     // the oracle recomputes (magic + descriptor + content size + one
     // 64 KiB-block header per block + EndMark + XXH32 checksum), and
-    // the greedy-compressed frame must decode back to the text.
+    // the lz4-java-compressed frame must decode back to the text.
     "lz4_roundtrip" -> ((s, dir) => {
       import s.implicits._
       import java.nio.charset.StandardCharsets.UTF_8
@@ -5746,11 +5745,9 @@ object SparkEntry {
         .toDF("doc_id", "stored_len", "ok_stored", "txt")
         .orderBy("doc_id")
     }),
-    // bzip2 round-trip per doc through the full hand-written pipeline
-    // BOTH ways: RLE1 → BWT → MTF/RLE2 → Huffman on encode, the
-    // complete inverse (+ both CRC tiers) on decode. The recovered
-    // text itself is the compared value, so any BWT orientation, MTF,
-    // run-coding or bit-packing bug surfaces as a value mismatch.
+    // bzip2 round-trip per doc BOTH ways through commons-compress
+    // (both CRC tiers verified on decode). The recovered text itself
+    // is the compared value.
     "bz2_roundtrip" -> ((s, dir) => {
       import s.implicits._
       import java.nio.charset.StandardCharsets.UTF_8
@@ -5803,7 +5800,7 @@ object SparkEntry {
     // ZIP archive round-trip: per group one archive of `<id>.txt`
     // members (scraped datasets ship zipped), built and re-read
     // through the hand-written central-directory walk — deflate via
-    // the in-house codec, CRC-32 verified per member.
+    // Gzip's encoder and shared inflate, CRC-32 verified per member.
     "zip_roundtrip" -> ((s, dir) => {
       import s.implicits._
       import java.nio.charset.StandardCharsets.UTF_8

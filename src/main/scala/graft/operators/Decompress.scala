@@ -3,11 +3,15 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Unified decompression dispatch over the four hand-written codecs
-  * — the compression sibling of [[Multimodal.extractAudioMeta]]'s
+/** Unified decompression dispatch over the six lossless codecs —
+  * the compression sibling of [[Multimodal.extractAudioMeta]]'s
   * seven-format audio dispatcher: a mixed crawl/dump corpus carries
-  * `.gz`, `.bz2`, `.xz` and `.zst` blobs side by side, and ingest
-  * wants ONE call that sniffs magic bytes and routes.
+  * `.gz`, `.bz2`, `.xz`, `.zst`, `.lz4` and `.sz` blobs side by side,
+  * and ingest wants ONE call that sniffs magic bytes and routes. The
+  * codec objects decode through the libraries already on the Spark
+  * classpath (JDK zlib, commons-compress, xz, zstd-jni, snappy-java);
+  * LZ4 frames keep the hand decoder, the only one here that reads
+  * linked-block frames.
   *
   * Probes are mutually disjoint by construction (distinct magic
   * prefixes: `1f 8b`, `BZh`, `fd 37 7a 58 5a 00`, `28 b5 2f fd`); a
@@ -17,6 +21,18 @@ import org.apache.spark.sql.functions._
   * truncated prefix of one) but fails to decode fails loudly: a cut
   * gzip member must not silently pass through as "raw". Row-local. */
 object Decompress {
+
+  /** Run a library decode under the repo's malformed-input contract:
+    * the libraries' corrupt-stream exceptions (IOExceptions such as
+    * zstd-jni's `ZstdIOException` and xz's `CorruptedInputException`,
+    * and unchecked ones such as lz4-java's `LZ4Exception`) surface as
+    * IllegalArgumentException naming the codec. */
+  private[operators] def asMalformed[T](codec: String)(f: => T): T =
+    try f catch {
+      case e: IllegalArgumentException => throw e
+      case e @ (_: java.io.IOException | _: RuntimeException) =>
+        throw new IllegalArgumentException(s"corrupt $codec stream: ${e.getMessage}", e)
+    }
 
   private val GzipMagic = Array(0x1f, 0x8b)
   private val Bzip2Magic = Array('B'.toInt, 'Z'.toInt, 'h'.toInt)

@@ -1,35 +1,34 @@
 package graft.operators
 
-import java.util.zip.CRC32
+import java.util.zip.{Adler32, CRC32, DataFormatException, Inflater}
 
-/** Hand-written gzip (RFC 1952) over the repo's own deflate machinery
-  * — the ingestion codec for web-crawl corpora (Common Crawl WARC
-  * files are concatenated per-record gzip members, so splitting and
-  * inflating members IS the 100 TB text-ingest hot path).
+/** Gzip (RFC 1952) and zlib (RFC 1950) envelopes around deflate — the
+  * ingestion codec for web-crawl corpora (Common Crawl WARC files are
+  * concatenated per-record gzip members, so splitting and inflating
+  * members IS the 100 TB text-ingest hot path).
   *
   * Decode side: full RFC 1952 member parse — magic/CM/FLG validation,
   * FEXTRA/FNAME/FCOMMENT/FHCRC optional fields, reserved FLG bits
-  * rejected — around a raw RFC 1951 inflate (all three block types,
-  * shared tables/Huffman/bit-reader with [[PngCodec]]), then CRC-32
-  * and ISIZE trailer verification. Multi-member streams concatenate
-  * (RFC 1952 §2.2: "a gzip file consists of a series of members");
-  * [[members]] exposes the per-member boundaries so a WARC reader can
-  * address records individually.
+  * rejected — around the JDK's raw RFC 1951 `Inflater` (the one
+  * inflate in main code; [[PngCodec]], [[PdfCodec]], [[ZipCodec]],
+  * Avro and the HTTP `deflate` encoding share it through
+  * [[inflateRaw]] and [[zlibInflate]]), then CRC-32 and ISIZE trailer
+  * verification. Multi-member streams concatenate (RFC 1952 §2.2: "a
+  * gzip file consists of a series of members"); [[members]] exposes
+  * the per-member boundaries, found from `Inflater.getRemaining`, so a
+  * WARC reader can address records individually.
   *
-  * Encode side: a REAL compressor, not a stored-only shim —
-  * [[deflateFixed]] runs greedy hash-chain LZ77 matching (3-byte
+  * Encode side stays hand-written, because callers depend on its exact
+  * bytes: [[deflateFixed]] runs greedy hash-chain LZ77 matching (3-byte
   * insert hash, 32 KiB window, match length 3..258, chain depth
-  * capped) and emits fixed-Huffman codes (RFC 1951 §3.2.6), which
-  * compresses repetitive crawl text for real; [[gzip]] with
-  * `stored = true` emits stored blocks instead, whose output size is
-  * the closed form `18 + n + 5·⌈n/65535⌉` that a SQL oracle can
-  * recompute exactly. Headers are deterministic (MTIME 0, XFL 0,
-  * OS 255) so equal payloads gzip to equal bytes — a dedup-safe
-  * property the spec pins.
-  *
-  * No JDK Deflater/Inflater/GZIPOutputStream anywhere in main code;
-  * the test suite cross-checks both directions against the JDK's
-  * independent implementation.
+  * capped) and emits fixed-Huffman codes (RFC 1951 §3.2.6);
+  * [[gzip]] with `stored = true` emits stored blocks instead, whose
+  * output size is the closed form `18 + n + 5·⌈n/65535⌉` that a SQL
+  * oracle can recompute exactly; [[gzipAuto]] picks the best of
+  * stored / fixed / dynamic-Huffman blocks. Headers are deterministic
+  * (MTIME 0, XFL 0, OS 255) so equal payloads gzip to equal bytes — a
+  * dedup-safe property the spec pins. The test suite cross-checks both
+  * directions against the JDK's GZIP streams.
   *
   * Reference scope: lithops-dataframe reads object-store files
   * (`io.py:13-88`) but has no compressed-container codec; this module
@@ -44,67 +43,80 @@ object Gzip {
     * optional original-file-name header field. */
   final case class Member(payload: Array[Byte], start: Int, end: Int, fname: Option[String])
 
-  // ---- raw inflate (RFC 1951, unknown output size) ---------------------
+  // ---- RFC 1951 length/distance tables (§3.2.5), encoder side -----------
 
-  /** Inflate a raw deflate stream starting at byte `start`, growable
-    * output (gzip carries no up-front size — ISIZE is a trailer).
-    * Returns (decompressed bytes, offset of the first byte AFTER the
-    * deflate stream). Block decode is the same §3.2.4/6/7 walk as
-    * [[PngCodec.inflate]], sharing its tables and canonical-Huffman
-    * reader; only the output policy (grow vs fixed) differs. */
-  private[graft] def inflateRaw(data: Array[Byte], start: Int): (Array[Byte], Int) = {
-    import PngCodec.{BitReader, FixedLit, FixedDist, LenBase, LenExtra, DistBase, DistExtra}
-    val br = new BitReader(data, start)
-    var out = new Array[Byte](8192)
-    var n = 0
-    def ensure(k: Int): Unit =
-      if (n + k > out.length) {
-        var cap = out.length
-        while (cap < n + k) cap = cap << 1
-        out = java.util.Arrays.copyOf(out, cap)
+  private val LenBase = Array(
+    3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31, 35, 43, 51,
+    59, 67, 83, 99, 115, 131, 163, 195, 227, 258)
+  private val LenExtra = Array(
+    0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3, 4, 4, 4,
+    4, 5, 5, 5, 5, 0)
+  private val DistBase = Array(
+    1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97, 129, 193, 257, 385,
+    513, 769, 1025, 1537, 2049, 3073, 4097, 6145, 8193, 12289, 16385, 24577)
+  private val DistExtra = Array(
+    0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6, 7, 7, 8, 8, 9, 9, 10,
+    10, 11, 11, 12, 12, 13, 13)
+
+  // ---- raw inflate (RFC 1951) -------------------------------------------
+
+  /** Inflate a raw deflate stream starting at byte `start` through the
+    * JDK `Inflater` (ended before returning). Returns (decompressed
+    * bytes, offset of the first byte AFTER the deflate stream). Output
+    * beyond `limit` bytes fails before it is produced; corrupt and
+    * truncated streams raise IllegalArgumentException. */
+  private[graft] def inflateRaw(data: Array[Byte], start: Int,
+      limit: Int = Int.MaxValue - 8): (Array[Byte], Int) = {
+    val inf = new Inflater(true)
+    try {
+      inf.setInput(data, start, data.length - start)
+      // one byte of headroom past `limit` tells "exactly limit" from "more";
+      // the first guess stays small because `data` may hold many more
+      // members after this stream (a WARC file)
+      val cap = limit.toLong + 1
+      var out = new Array[Byte](math.min(cap, math.min(8192L, math.max(64L, (data.length - start) * 4L))).toInt)
+      var n = 0
+      while (!inf.finished()) {
+        if (n == out.length) {
+          require(n < cap, s"deflate output exceeds $limit bytes")
+          out = java.util.Arrays.copyOf(out, math.min(cap, n * 2L).toInt)
+        }
+        val k = inf.inflate(out, n, out.length - n)
+        if (k == 0) require(!inf.needsInput() && !inf.needsDictionary(), "truncated deflate stream")
+        n += k
       }
-    var fin = false
-    while (!fin) {
-      fin = br.bits(1) == 1
-      br.bits(2) match {
-        case 0 =>
-          br.alignToByte()
-          require(br.pos + 4 <= data.length, "truncated stored-block header")
-          val len = (data(br.pos) & 0xff) | ((data(br.pos + 1) & 0xff) << 8)
-          val nlen = (data(br.pos + 2) & 0xff) | ((data(br.pos + 3) & 0xff) << 8)
-          require((len ^ nlen) == 0xffff, "corrupt stored block (LEN/NLEN mismatch)")
-          require(br.pos + 4 + len <= data.length, "truncated stored-block payload")
-          ensure(len)
-          System.arraycopy(data, br.pos + 4, out, n, len)
-          n += len
-          br.pos += 4 + len
-        case btype @ (1 | 2) =>
-          val (lit, dist) = if (btype == 1) (FixedLit, FixedDist) else PngCodec.dynamicTables(br)
-          var eob = false
-          while (!eob) {
-            val sym = br.decode(lit)
-            if (sym < 256) { ensure(1); out(n) = sym.toByte; n += 1 }
-            else if (sym == 256) eob = true
-            else {
-              require(sym <= 285, s"invalid length symbol $sym")
-              val li = sym - 257
-              val length = LenBase(li) + br.bits(LenExtra(li))
-              val ds = br.decode(dist)
-              require(ds <= 29, s"invalid distance symbol $ds")
-              val distance = DistBase(ds) + br.bits(DistExtra(ds))
-              require(distance <= n, "back-reference before start of output")
-              ensure(length)
-              var j = 0
-              while (j < length) { out(n + j) = out(n - distance + j); j += 1 }
-              n += length
-            }
-          }
-        case other =>
-          throw new IllegalArgumentException(s"reserved deflate block type $other")
-      }
+      require(n <= limit, s"deflate output exceeds $limit bytes")
+      (java.util.Arrays.copyOf(out, n), data.length - inf.getRemaining)
+    } catch {
+      case e: DataFormatException =>
+        throw new IllegalArgumentException(s"corrupt deflate stream: ${e.getMessage}", e)
+    } finally inf.end()
+  }
+
+  /** Inflate a zlib (RFC 1950) stream: header checked (CM 8, FCHECK,
+    * preset dictionaries rejected), body through [[inflateRaw]] with
+    * its `limit`, and the big-endian Adler-32 trailer verified when it
+    * is present. Returns (payload, whether the trailer was present);
+    * whether a missing trailer or a short payload is acceptable is the
+    * caller's policy. */
+  private[graft] def zlibInflate(z: Array[Byte], limit: Int = Int.MaxValue - 8): (Array[Byte], Boolean) = {
+    require(z.length >= 2, s"zlib stream too short: ${z.length} bytes")
+    val cmf = z(0) & 0xff
+    val flg = z(1) & 0xff
+    require((cmf & 0x0f) == 8, s"unsupported zlib compression method ${cmf & 0x0f}")
+    require((cmf * 256 + flg) % 31 == 0, "corrupt zlib header (FCHECK)")
+    require((flg & 0x20) == 0, "preset dictionary (FDICT) not supported")
+    val (out, end) = inflateRaw(z, 2, limit)
+    val hasTrailer = end + 4 <= z.length
+    if (hasTrailer) {
+      val want = ((z(end) & 0xffL) << 24) | ((z(end + 1) & 0xffL) << 16) |
+        ((z(end + 2) & 0xffL) << 8) | (z(end + 3) & 0xffL)
+      val ad = new Adler32()
+      ad.update(out)
+      require(ad.getValue == want,
+        f"zlib Adler-32 mismatch: got ${ad.getValue}%08x, want $want%08x")
     }
-    br.alignToByte()
-    (java.util.Arrays.copyOf(out, n), br.pos)
+    (out, hasTrailer)
   }
 
   // ---- gzip member decode (RFC 1952) -----------------------------------
@@ -310,7 +322,6 @@ object Gzip {
     * bit cost is closed-form per token, so best-of-three selection
     * never needs a second emit. */
   private def fixedByteLen(toks: Array[Long]): Int = {
-    import PngCodec.{LenBase, LenExtra, DistBase, DistExtra}
     var bits = 3L + 7L // header + EOB (symbol 256 is 7 bits)
     toks.foreach { t =>
       val dist = (t & 0xffffffffL).toInt
@@ -325,7 +336,6 @@ object Gzip {
   }
 
   private def deflateFixedFromTokens(toks: Array[Long]): Array[Byte] = {
-    import PngCodec.{LenBase, LenExtra, DistBase, DistExtra}
     val bw = new BitWriter
     bw.bits(1, 1) // BFINAL
     bw.bits(1, 2) // BTYPE 01 fixed
@@ -447,7 +457,6 @@ object Gzip {
     deflateDynamicFromTokens(lz77Tokens(raw))
 
   private def deflateDynamicFromTokens(toks: Array[Long]): Array[Byte] = {
-    import PngCodec.{LenBase, LenExtra, DistBase, DistExtra}
     val litFreq = new Array[Long](286)
     val distFreq = new Array[Long](30)
     litFreq(256) = 1 // end-of-block

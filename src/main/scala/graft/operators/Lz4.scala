@@ -1,33 +1,34 @@
 package graft.operators
 
-/** LZ4 frame + block codec, hand-written from the PUBLIC format specs
-  * (lz4 Frame Format v1.6.1 and Block Format descriptions published in
-  * the lz4 project documentation) — no codec library. LZ4 is the
-  * remaining high-throughput member of the crawl/columnar compression
-  * family after gzip/bzip2/xz/zstd: Hadoop sequence files, Kafka
-  * topics, and fast-tier corpus shards ship as `.lz4` frames.
+import net.jpountz.lz4.LZ4Factory
+import net.jpountz.xxhash.XXHashFactory
+
+/** LZ4 frame + block codec over the PUBLIC format specs (lz4 Frame
+  * Format v1.6.1 and Block Format descriptions published in the lz4
+  * project documentation). LZ4 is the high-throughput member of the
+  * crawl/columnar compression family after gzip/bzip2/xz/zstd: Hadoop
+  * sequence files, Kafka topics, and fast-tier corpus shards ship as
+  * `.lz4` frames.
   *
-  * Decoder covers the full frame format: magic, descriptor
+  * The decoder stays hand-written: lz4-java's `LZ4FrameInputStream`
+  * rejects linked-block (B.Indep=0) frames, which `lz4 -BD` writes,
+  * and here they decode naturally because every block shares one
+  * output window. It covers the full frame format: magic, descriptor
   * (version/flags/block-max-size/optional content size + dict id)
   * with its XXH32 header checksum, data blocks (compressed and
   * uncompressed, optional per-block XXH32), EndMark, optional XXH32
-  * content checksum, skippable frames, and concatenated frames.
-  * Linked-block (B.Indep=0) streams decode naturally because every
-  * block shares one output window. The legacy stream format
-  * (magic 0x184C2102) is recognized BY NAME and rejected. Dictionary
-  * frames (DictID flag) are rejected by name — presets are external
-  * data, not frame structure.
+  * content checksum, skippable frames, and concatenated frames. The
+  * legacy stream format (magic 0x184C2102) is recognized BY NAME and
+  * rejected. Dictionary frames (DictID flag) are rejected by name —
+  * presets are external data, not frame structure.
   *
-  * Encoder is a real compressor: greedy 4-byte hash-table matcher per
-  * the block spec's end-of-block rules (last 5 bytes literal, no match
-  * starting within the final 12), independent 64 KiB blocks with
-  * stored fallback, content size + content checksum emitted. Both
-  * directions are cross-checked in the spec suite against the
-  * container's independent `lz4` binary.
-  *
-  * XXH32 is implemented from the public xxHash specification (same
-  * family as [[Zstd.xxh64]]; the frame format mandates the 32-bit
-  * variant). Row-local throughout — compression work scales with the
+  * The encoder writes independent 64 KiB blocks compressed by
+  * lz4-java's block compressor, stored when a block does not shrink,
+  * with content size + content checksum; [[encodeStored]] stores every
+  * block so its size is the closed form [[storedSize]]. XXH32 is
+  * lz4-java's `XXHashFactory`. Both directions are cross-checked in
+  * the spec suite against the container's independent `lz4` binary.
+  * Row-local throughout — compression work scales with the
   * partition, never the driver. */
 object Lz4 {
 
@@ -35,55 +36,13 @@ object Lz4 {
   private val LegacyMagic = 0x184c2102
   private val SkipMagicBase = 0x184d2a50
 
-  // ---- XXH32 (public algorithm) ----------------------------------------
-
-  private val P1 = 0x9e3779b1
-  private val P2 = 0x85ebca77
-  private val P3 = 0xc2b2ae3d
-  private val P4 = 0x27d4eb2f
-  private val P5 = 0x165667b1
-
   private def le32(b: Array[Byte], p: Int): Int =
     (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
       ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
 
-  private def rotl(x: Int, r: Int): Int = Integer.rotateLeft(x, r)
-
   /** XXH32 over `b[off, off+len)` with the given seed. */
-  def xxh32(b: Array[Byte], off: Int, len: Int, seed: Int = 0): Int = {
-    var p = off
-    val end = off + len
-    var acc =
-      if (len >= 16) {
-        var v1 = seed + P1 + P2
-        var v2 = seed + P2
-        var v3 = seed
-        var v4 = seed - P1
-        while (p + 16 <= end) {
-          v1 = rotl(v1 + le32(b, p) * P2, 13) * P1
-          v2 = rotl(v2 + le32(b, p + 4) * P2, 13) * P1
-          v3 = rotl(v3 + le32(b, p + 8) * P2, 13) * P1
-          v4 = rotl(v4 + le32(b, p + 12) * P2, 13) * P1
-          p += 16
-        }
-        rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
-      } else seed + P5
-    acc += len
-    while (p + 4 <= end) {
-      acc = rotl(acc + le32(b, p) * P3, 17) * P4
-      p += 4
-    }
-    while (p < end) {
-      acc = rotl(acc + (b(p) & 0xff) * P5, 11) * P1
-      p += 1
-    }
-    acc ^= acc >>> 15
-    acc *= P2
-    acc ^= acc >>> 13
-    acc *= P3
-    acc ^= acc >>> 16
-    acc
-  }
+  def xxh32(b: Array[Byte], off: Int, len: Int, seed: Int = 0): Int =
+    XXHashFactory.fastestInstance().hash32().hash(b, off, len, seed)
 
   // ---- block format ----------------------------------------------------
 
@@ -149,61 +108,11 @@ object Lz4 {
     }
   }
 
-  /** Compress one block (greedy hash-table matcher). Returns null when
+  /** Compress one block through lz4-java. Returns null when
     * incompressible (caller stores the block uncompressed). */
-  private[operators] def compressBlock(src: Array[Byte], from: Int, until: Int): Array[Byte] = {
-    val len = until - from
-    val out = new java.io.ByteArrayOutputStream(len / 2 + 16)
-    def writeLen(first: Int, v: Int): Unit = {
-      // token nibble already holds min(v,15); extension bytes of 255
-      var rest = v - 15
-      if (first == 15) {
-        while (rest >= 255) { out.write(255); rest -= 255 }
-        out.write(rest)
-      }
-    }
-    def emit(litFrom: Int, litUntil: Int, off: Int, mLen: Int): Unit = {
-      val litLen = litUntil - litFrom
-      val tokLit = math.min(litLen, 15)
-      val tokMatch = if (mLen < 0) 0 else math.min(mLen - 4, 15)
-      out.write((tokLit << 4) | tokMatch)
-      writeLen(tokLit, litLen)
-      var i = litFrom
-      while (i < litUntil) { out.write(src(i) & 0xff); i += 1 }
-      if (mLen >= 0) {
-        out.write(off & 0xff)
-        out.write((off >>> 8) & 0xff)
-        writeLen(tokMatch, mLen - 4)
-      }
-    }
-    if (len < 13) { // too short for any conforming match
-      emit(from, until, 0, -1)
-    } else {
-      val bits = 14
-      val table = new Array[Int](1 << bits)
-      java.util.Arrays.fill(table, -1)
-      def hash(p: Int): Int =
-        ((le32(src, p) * -1640531535) >>> (32 - bits)) & ((1 << bits) - 1)
-      val mfLimit = until - 12 // no match may START at/after here
-      val matchEnd = until - 5 // last 5 bytes stay literal
-      var anchor = from
-      var i = from
-      while (i < mfLimit) {
-        val h = hash(i)
-        val c = table(h)
-        table(h) = i
-        if (c >= from && i - c <= 65535 && le32(src, c) == le32(src, i)) {
-          var m = 4
-          while (i + m < matchEnd && src(c + m) == src(i + m)) m += 1
-          emit(anchor, i, i - c, m)
-          anchor = i + m
-          i = anchor
-        } else i += 1
-      }
-      emit(anchor, until, 0, -1)
-    }
-    val res = out.toByteArray
-    if (res.length >= len) null else res
+  private def compressBlock(src: Array[Byte], from: Int, until: Int): Array[Byte] = {
+    val res = LZ4Factory.fastestInstance().fastCompressor().compress(src, from, until - from)
+    if (res.length >= until - from) null else res
   }
 
   // ---- frame format ----------------------------------------------------

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * recovery scan), full object lexer (names, numbers, literal strings
   * with all escape forms + balanced parens, hex strings, arrays,
   * dictionaries, indirect references, booleans/null), stream objects
-  * with direct `/Length` and `/FlateDecode` via the repo's own
-  * RFC 1950/1951 inflate ([[Gzip.inflateRaw]] under a validated zlib
-  * header, Adler-32 verified) — no JDK Inflater. Page tree walk
+  * with direct `/Length` and `/FlateDecode` via the repo's one zlib
+  * inflate ([[Gzip.zlibInflate]]: validated header, JDK `Inflater`,
+  * Adler-32 verified when present). Page tree walk
   * resolves nested `/Kids`, per-page `/Contents` (single ref or
   * array), and extracts text from content streams: `Tj`, `'`, `"`
   * and `TJ` string-show operators, with `Td TD T* Tm` treated as run
@@ -324,35 +324,15 @@ object PdfCodec {
       c.expect("endstream")
       val data = dict.m.get("Filter") match {
         case None => raw
-        case Some(PName("FlateDecode")) => zlibInflate(raw)
-        case Some(PArr(Vector(PName("FlateDecode")))) => zlibInflate(raw)
+        // PDF's policy: a missing Adler-32 trailer is accepted (writers
+        // in the wild drop it); a present one is verified
+        case Some(PName("FlateDecode")) | Some(PArr(Vector(PName("FlateDecode")))) =>
+          Gzip.zlibInflate(raw)._1
         case Some(other) =>
           throw new IllegalArgumentException(s"unsupported stream filter $other")
       }
       PStream(dict, data)
     } else v
-  }
-
-  /** Inflate a zlib (RFC 1950) stream of unknown decompressed size:
-    * header checks, raw inflate via [[Gzip.inflateRaw]], Adler-32
-    * verified when the trailer is present. */
-  private def zlibInflate(z: Array[Byte]): Array[Byte] = {
-    require(z.length >= 2, "zlib stream too short")
-    val cmf = z(0) & 0xff
-    val flg = z(1) & 0xff
-    require((cmf & 0x0f) == 8, s"unsupported zlib method ${cmf & 0x0f}")
-    require((cmf * 256 + flg) % 31 == 0, "corrupt zlib header (FCHECK)")
-    require((flg & 0x20) == 0, "preset dictionary (FDICT) not supported")
-    val (out, end) = Gzip.inflateRaw(z, 2)
-    if (end + 4 <= z.length) {
-      val want = ((z(end) & 0xffL) << 24) | ((z(end + 1) & 0xffL) << 16) |
-        ((z(end + 2) & 0xffL) << 8) | (z(end + 3) & 0xffL)
-      val ad = new Adler32()
-      ad.update(out)
-      require(ad.getValue == want,
-        f"zlib Adler-32 mismatch: got ${ad.getValue}%08x, want $want%08x")
-    }
-    out
   }
 
   // ---- page walk + text extraction ------------------------------------

@@ -1,50 +1,38 @@
 package graft.operators
 
-/** Snappy codec, hand-written from the PUBLIC format descriptions in
-  * the snappy project (`format_description.txt` for the block format,
-  * `framing_format.txt` for the stream framing) — no codec library.
-  * Snappy is the columnar-world default: parquet pages, Hadoop
+/** Snappy — the columnar-world default: parquet pages, Hadoop
   * sequence files, and Kafka batches ship snappy-compressed, and the
   * framed variant (`.sz`) is the streaming interchange form.
   *
-  * Block format: a varint32 uncompressed-length preamble, then tagged
-  * elements — literals (two-bit tag 00, lengths 1..60 inline or 1-4
-  * extra length bytes) and copies with 1-, 2- or 4-byte offsets
-  * (tags 01/10/11); copies may overlap forward (the RLE trick).
+  * Block format: decoded and encoded by snappy-java, the library
+  * Spark and parquet use. Ahead of the native call the varint32
+  * preamble is read and its declared length bounded at 64× the input
+  * (no valid element expands more than ~21×), so a crafted block
+  * declaring gigabytes fails typed instead of allocating them.
   *
-  * Framing format: a stream identifier chunk (`sNaPpY`), then
-  * compressed (0x00) / uncompressed (0x01) data chunks each carrying a
-  * MASKED CRC32C of the uncompressed payload (mask =
-  * rotate-right-15 + 0xa282ead8, per the spec), 64 KiB max payload per
-  * chunk; padding (0xfe) and other skippable chunks (0x80-0xfd) skip;
-  * reserved unskippable chunks (0x02-0x7f) fail loudly by code.
-  *
-  * Encoder: greedy 4-byte hash-table matcher emitting 2-byte-offset
-  * copies (1-byte offsets when they fit), chunked at 64 KiB for the
-  * framed form with per-chunk stored fallback. Cross-checked in the
-  * spec suite against the INDEPENDENT snappy-java implementation that
-  * ships on the Spark classpath, both directions. CRC32C is the JDK's.
-  * Row-local throughout. */
+  * Framing format (`framing_format.txt`): a stream identifier chunk
+  * (`sNaPpY`), then compressed (0x00) / uncompressed (0x01) data
+  * chunks each carrying a MASKED CRC32C of the uncompressed payload
+  * (mask = rotate-right-15 + 0xa282ead8, per the spec), 64 KiB max
+  * payload per chunk; padding (0xfe) and other skippable chunks
+  * (0x80-0xfd) skip; reserved unskippable chunks (0x02-0x7f) fail
+  * loudly by code. The chunk walk stays hand-written so each framing
+  * failure names its chunk; block bodies go through the library, and
+  * [[encodeFramedStored]]'s all-uncompressed output keeps the closed
+  * size [[framedStoredSize]]. CRC32C is the JDK's. Malformed input
+  * raises IllegalArgumentException. Row-local throughout. */
 object Snappy {
 
-  // ---- varint32 --------------------------------------------------------
+  // ---- block format ----------------------------------------------------
 
-  private def writeVarint(out: java.io.ByteArrayOutputStream, v0: Int): Unit = {
-    var v = v0
-    while ((v & ~0x7f) != 0) {
-      out.write((v & 0x7f) | 0x80)
-      v >>>= 7
-    }
-    out.write(v)
-  }
-
-  private def readVarint(b: Array[Byte], from: Int): (Int, Int) = {
+  /** The varint32 uncompressed-length preamble at `from`. */
+  private def declaredLength(b: Array[Byte], from: Int, until: Int): Int = {
     var v = 0
     var shift = 0
     var p = from
     var going = true
     while (going) {
-      require(p < b.length, "snappy preamble truncated")
+      require(p < until, "snappy preamble truncated")
       require(shift <= 28, "snappy varint longer than 32 bits")
       val x = b(p) & 0xff
       v |= (x & 0x7f) << shift
@@ -52,15 +40,13 @@ object Snappy {
       shift += 7
       if ((x & 0x80) == 0) going = false
     }
-    (v, p)
+    v
   }
-
-  // ---- block format ----------------------------------------------------
 
   /** Uncompress one snappy block `b[from, until)` (varint preamble
     * included). Malformed input fails loudly. */
   def uncompressBlock(b: Array[Byte], from: Int, until: Int): Array[Byte] = {
-    val (outLen, start) = readVarint(b, from)
+    val outLen = declaredLength(b, from, until)
     require(outLen >= 0, s"negative declared length $outLen")
     // no snappy element expands more than ~21x (3-byte copy2 -> 64
     // bytes); 64x bounds any valid stream, so an implausible declared
@@ -68,130 +54,18 @@ object Snappy {
     require(outLen <= (until - from).toLong * 64 + 64,
       s"declared length $outLen implausible for ${until - from} input bytes")
     val out = new Array[Byte](outLen)
-    var n = 0
-    var p = start
-    while (p < until) {
-      val tag = b(p) & 0xff
-      p += 1
-      (tag & 3) match {
-        case 0 => // literal
-          var len = (tag >>> 2) + 1
-          if (len > 60) {
-            val extra = len - 60 // 1..4 length bytes
-            require(p + extra <= until, "truncated literal length")
-            len = 0
-            var i = extra - 1
-            while (i >= 0) { len = (len << 8) | (b(p + i) & 0xff); i -= 1 }
-            len += 1
-            require(len > 0, "literal length overflow")
-            p += extra
-          }
-          require(p + len <= until, s"literal of $len overruns input at $p")
-          require(n + len <= outLen, s"literal of $len overruns declared output")
-          System.arraycopy(b, p, out, n, len)
-          p += len
-          n += len
-        case c => // copy
-          var len = 0
-          var off = 0
-          if (c == 1) {
-            require(p < until, "truncated copy1")
-            len = ((tag >>> 2) & 0x7) + 4
-            off = ((tag >>> 5) << 8) | (b(p) & 0xff)
-            p += 1
-          } else if (c == 2) {
-            require(p + 2 <= until, "truncated copy2")
-            len = (tag >>> 2) + 1
-            off = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-            p += 2
-          } else {
-            require(p + 4 <= until, "truncated copy4")
-            len = (tag >>> 2) + 1
-            off = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-              ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
-            require(off > 0, "copy4 offset overflow")
-          }
-          require(off > 0, "snappy copy offset 0 is invalid")
-          require(off <= n, s"copy offset $off exceeds produced output $n")
-          require(n + len <= outLen, s"copy of $len overruns declared output")
-          var q = n - off
-          var i = 0
-          while (i < len) { out(n) = out(q); n += 1; q += 1; i += 1 }
-      }
+    val n = Decompress.asMalformed("snappy") {
+      org.xerial.snappy.Snappy.uncompress(b, from, until - from, out, 0)
     }
     require(n == outLen, s"snappy block produced $n bytes, declared $outLen")
     out
   }
 
-  /** Compress one block (greedy matcher; always emits a VALID block —
-    * worst case all-literal, max overhead length/6 + preamble). */
+  /** Compress `src[from, until)` as one block through snappy-java. */
   def compressBlock(src: Array[Byte], from: Int, until: Int): Array[Byte] = {
-    val len = until - from
-    val out = new java.io.ByteArrayOutputStream(len / 2 + 16)
-    writeVarint(out, len)
-    def le32(p: Int): Int =
-      (src(p) & 0xff) | ((src(p + 1) & 0xff) << 8) |
-        ((src(p + 2) & 0xff) << 16) | ((src(p + 3) & 0xff) << 24)
-    def literal(a: Int, b: Int): Unit = {
-      var i = a
-      while (i < b) {
-        val chunk = math.min(b - i, 65536) // one length-3 literal element
-        if (chunk <= 60) out.write(((chunk - 1) << 2))
-        else if (chunk <= 256) { out.write(60 << 2); out.write(chunk - 1) }
-        else {
-          out.write(61 << 2)
-          out.write((chunk - 1) & 0xff)
-          out.write(((chunk - 1) >>> 8) & 0xff)
-        }
-        out.write(src, i, chunk)
-        i += chunk
-      }
-    }
-    def copy(off: Int, mLen0: Int): Unit = {
-      var mLen = mLen0
-      // long matches: 64-byte copy2 elements, remainder last
-      while (mLen > 64) { emitCopy(off, 64); mLen -= 64 }
-      // avoid a trailing copy shorter than 4 (not encodable as copy1,
-      // and copy2 of 1..3 is legal but wasteful-fine); the loop above
-      // keeps mLen >= 4 because matches start at >= 4
-      emitCopy(off, mLen)
-    }
-    def emitCopy(off: Int, l: Int): Unit = {
-      if (l >= 4 && l <= 11 && off < 2048) {
-        out.write(1 | ((l - 4) << 2) | ((off >>> 8) << 5))
-        out.write(off & 0xff)
-      } else {
-        out.write(2 | ((l - 1) << 2))
-        out.write(off & 0xff)
-        out.write((off >>> 8) & 0xff)
-      }
-    }
-    if (len < 4) literal(from, until)
-    else {
-      val bits = 14
-      val table = new Array[Int](1 << bits)
-      java.util.Arrays.fill(table, -1)
-      def hash(p: Int): Int =
-        ((le32(p) * -1640531535) >>> (32 - bits)) & ((1 << bits) - 1)
-      var anchor = from
-      var i = from
-      val limit = until - 4
-      while (i <= limit) {
-        val h = hash(i)
-        val c = table(h)
-        table(h) = i
-        if (c >= from && i - c <= 65535 && le32(c) == le32(i)) {
-          var m = 4
-          while (i + m < until && src(c + m) == src(i + m)) m += 1
-          literal(anchor, i)
-          copy(i - c, m)
-          anchor = i + m
-          i = anchor
-        } else i += 1
-      }
-      literal(anchor, until)
-    }
-    out.toByteArray
+    val out = new Array[Byte](org.xerial.snappy.Snappy.maxCompressedLength(until - from))
+    val n = org.xerial.snappy.Snappy.compress(src, from, until - from, out, 0)
+    java.util.Arrays.copyOf(out, n)
   }
 
   /** One-shot block-format compress/uncompress (the parquet/Hadoop
@@ -212,39 +86,26 @@ object Snappy {
     ((crc >>> 15) | (crc << 17)) + 0xa282ead8
   }
 
-  /** Framed encode: stream id + one chunk per 64 KiB, compressed form
-    * only when it shrinks (spec recommendation), masked CRC32C per
-    * chunk. */
-  def encodeFramed(raw: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(raw.length / 2 + 32)
-    def chunk(tpe: Int, payload: Array[Byte], crc: Int): Unit = {
-      val n = payload.length + 4
-      out.write(tpe)
-      out.write(n & 0xff); out.write((n >>> 8) & 0xff); out.write((n >>> 16) & 0xff)
-      out.write(crc & 0xff); out.write((crc >>> 8) & 0xff)
-      out.write((crc >>> 16) & 0xff); out.write((crc >>> 24) & 0xff)
-      out.write(payload, 0, payload.length)
-    }
-    out.write(0xff)
-    out.write(6); out.write(0); out.write(0)
-    out.write(StreamId, 0, 6)
-    var p = 0
-    while (p < raw.length) {
-      val n = math.min(ChunkMax, raw.length - p)
-      val crc = maskedCrc(raw, p, n)
-      val comp = compressBlock(raw, p, p + n)
-      if (comp.length < n) chunk(0x00, comp, crc)
-      else chunk(0x01, java.util.Arrays.copyOfRange(raw, p, p + n), crc)
-      p += n
-    }
-    out.toByteArray
-  }
+  /** Framed encode: stream id + one chunk per 64 KiB, the snappy-java
+    * block form only when it shrinks (spec recommendation), masked
+    * CRC32C per chunk. */
+  def encodeFramed(raw: Array[Byte]): Array[Byte] = encodeFramedWith(raw, compress = true)
 
   /** All-uncompressed framed stream — every chunk type 0x01, so the
     * output length is the closed form [[framedStoredSize]] (the oracle
     * hook). */
-  def encodeFramedStored(raw: Array[Byte]): Array[Byte] = {
+  def encodeFramedStored(raw: Array[Byte]): Array[Byte] = encodeFramedWith(raw, compress = false)
+
+  private def encodeFramedWith(raw: Array[Byte], compress: Boolean): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(raw.length + 32)
+    def chunk(tpe: Int, payload: Array[Byte], from: Int, len: Int, crc: Int): Unit = {
+      val n = len + 4
+      out.write(tpe)
+      out.write(n & 0xff); out.write((n >>> 8) & 0xff); out.write((n >>> 16) & 0xff)
+      out.write(crc & 0xff); out.write((crc >>> 8) & 0xff)
+      out.write((crc >>> 16) & 0xff); out.write((crc >>> 24) & 0xff)
+      out.write(payload, from, len)
+    }
     out.write(0xff)
     out.write(6); out.write(0); out.write(0)
     out.write(StreamId, 0, 6)
@@ -252,12 +113,9 @@ object Snappy {
     while (p < raw.length) {
       val n = math.min(ChunkMax, raw.length - p)
       val crc = maskedCrc(raw, p, n)
-      val m = n + 4
-      out.write(0x01)
-      out.write(m & 0xff); out.write((m >>> 8) & 0xff); out.write((m >>> 16) & 0xff)
-      out.write(crc & 0xff); out.write((crc >>> 8) & 0xff)
-      out.write((crc >>> 16) & 0xff); out.write((crc >>> 24) & 0xff)
-      out.write(raw, p, n)
+      val comp = if (compress) compressBlock(raw, p, p + n) else null
+      if (comp != null && comp.length < n) chunk(0x00, comp, 0, comp.length, crc)
+      else chunk(0x01, raw, p, n, crc)
       p += n
     }
     out.toByteArray

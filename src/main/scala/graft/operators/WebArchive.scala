@@ -235,24 +235,11 @@ object WebArchive {
     out
   }
 
-  /** Decode a zlib (RFC 1950) stream: header validated (CM=8, FCHECK,
-    * preset dictionaries rejected), raw-deflate inflate, Adler-32
-    * verified. */
+  /** Decode a zlib (RFC 1950) stream through [[Gzip.zlibInflate]];
+    * HTTP's policy is that the Adler-32 trailer must be present. */
   def zlibInflate(b: Array[Byte]): Array[Byte] = {
-    require(b.length >= 6, s"zlib stream too short: ${b.length} bytes")
-    val cmf = b(0) & 0xff
-    val flg = b(1) & 0xff
-    require((cmf & 0x0f) == 8, s"zlib CM ${cmf & 0x0f} != 8 (deflate)")
-    require(((cmf << 8) | flg) % 31 == 0, "zlib header FCHECK invalid")
-    require((flg & 0x20) == 0, "zlib FDICT preset dictionary unsupported")
-    val (raw, end) = Gzip.inflateRaw(b, 2)
-    require(end + 4 <= b.length, "zlib stream missing Adler-32 trailer")
-    val want = ((b(end) & 0xffL) << 24) | ((b(end + 1) & 0xffL) << 16) |
-      ((b(end + 2) & 0xffL) << 8) | (b(end + 3) & 0xffL)
-    val ad = new java.util.zip.Adler32()
-    ad.update(raw)
-    require(ad.getValue == want,
-      f"zlib Adler-32 mismatch: got ${ad.getValue}%08x, want $want%08x")
+    val (raw, hasTrailer) = Gzip.zlibInflate(b)
+    require(hasTrailer, "zlib stream missing Adler-32 trailer")
     raw
   }
 

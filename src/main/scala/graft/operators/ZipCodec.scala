@@ -13,7 +13,7 @@ import java.util.zip.CRC32
   * backwards scan over the comment tail), then the central directory
   * (the authoritative member list per spec), and extracts each member
   * through its local header — STORED (method 0) copied, DEFLATED
-  * (method 8) through the in-house [[Gzip.inflateRaw]]; every member's
+  * (method 8) through the shared [[Gzip.inflateRaw]]; every member's
   * CRC-32 and sizes are verified against the central directory, and
   * data-descriptor members (bit 3) resolve their sizes from the
   * central directory as the spec directs. Zip64, encryption, and

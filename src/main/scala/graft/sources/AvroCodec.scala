@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * Container: magic `Obj\x01`, a file-metadata map carrying
   * `avro.schema` (JSON) and `avro.codec`, a 16-byte sync marker, then
   * blocks of (record count, byte size, payload, sync). Codecs: `null`
-  * and `deflate` (raw RFC 1951 through the in-house
+  * and `deflate` (raw RFC 1951 through the shared inflate in
   * [[graft.operators.Gzip]]) and `snappy` (block format + 4-byte
   * big-endian CRC32 suffix, per the spec, through
   * [[graft.operators.Snappy]]).

@@ -8,7 +8,7 @@ import graft.operators.{Gzip, Snappy, Zstd}
 /** Hand-written Parquet DATA-PAGE reader — the engine can now read real
   * column chunks end-to-end without parquet-mr: footer ([[ParquetFooter]])
   * → per-page `PageHeader` (Thrift compact) → page decompression through
-  * the repo's OWN codecs (Snappy raw-block, gzip member, zstd frame) →
+  * the repo's codec objects (Snappy raw-block, gzip member, zstd frame) →
   * RLE/bit-packed-hybrid definition levels → PLAIN or RLE_DICTIONARY
   * values. Everything is off the public `parquet-format` spec
   * (`Encodings.md`, `parquet.thrift`).
@@ -21,9 +21,9 @@ import graft.operators.{Gzip, Snappy, Zstd}
   * PLAIN, PLAIN_DICTIONARY/RLE_DICTIONARY, boolean RLE, and the V2
   * DELTA family — DELTA_BINARY_PACKED (wrapping 64-bit block/miniblock
   * decode), DELTA_LENGTH_BYTE_ARRAY, DELTA_BYTE_ARRAY (front coding).
-  * Codecs: UNCOMPRESSED/SNAPPY/GZIP/ZSTD (all four decoders are the
-  * repo's own hand-written implementations — reading a zstd parquet
-  * chunk exercises the RFC 8878 decoder against real writer output).
+  * Codecs: UNCOMPRESSED/SNAPPY/GZIP/ZSTD (through [[Snappy]],
+  * [[Gzip]] and [[Zstd]], which decode with the snappy-java, JDK zlib
+  * and zstd-jni libraries already on the Spark classpath).
   *
   * Scale shape: one column chunk per task; the chunk walk is sequential
   * within a task by construction (pages chain), tasks fan out per

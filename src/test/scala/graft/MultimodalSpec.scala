@@ -273,7 +273,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("PNG inflate matches Deflater across levels, sizes and data shapes") {
     // stored (level 0), fixed (tiny inputs), dynamic (large/skewed):
-    // every Deflater output must round-trip through our pure inflate.
+    // every Deflater output must round-trip through our inflate.
     val rnd = new scala.util.Random(42)
     val shapes: Seq[Array[Byte]] = Seq(
       Array.emptyByteArray,
@@ -309,6 +309,9 @@ class MultimodalSpec extends SparkSpec {
     // flipped Adler trailer
     val badAd = z.clone(); badAd(n - 1) = (badAd(n - 1) ^ 0xff).toByte
     intercept[IllegalArgumentException] { graft.operators.PngCodec.inflate(badAd, 1000) }
+    // PNG policy: the decoded length must equal the raster size
+    intercept[IllegalArgumentException] { graft.operators.PngCodec.inflate(z, 999) }
+    intercept[IllegalArgumentException] { graft.operators.PngCodec.inflate(z, 1001) }
   }
 
   test("PNG RGBA (color type 6) round-trips") {

@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Snappy
 
-/** Cross-checked against snappy-java — the INDEPENDENT implementation
-  * already on the Spark classpath (it is what parquet/Spark use) — in
-  * both directions and both formats (raw block + framed stream). */
+/** Blocks go through snappy-java (what parquet/Spark use) behind the
+  * declared-length bound; the hand framed-stream walk is cross-checked
+  * against snappy-java's own framed streams in both directions. */
 class SnappySpec extends AnyFunSuite {
 
   private val samples: Seq[Array[Byte]] = Seq(
@@ -99,6 +99,15 @@ class SnappySpec extends AnyFunSuite {
     // the raw BLOCK format has no magic: it must sniff as raw, because
     // classifying arbitrary bytes as snappy would corrupt mixed buckets
     assert(graft.operators.Decompress.sniff(Snappy.compress(raw)) == "raw")
+  }
+
+  test("a 6-byte block declaring ~2^31 bytes fails on the 64x bound before any allocation") {
+    // without the bound snappy-java would allocate the declared length
+    // and throw OutOfMemoryError
+    val bomb = Array(0xff, 0xff, 0xff, 0xff, 0x07, 0x00).map(_.toByte)
+    val e = intercept[IllegalArgumentException](Snappy.uncompress(bomb))
+    assert(e.getMessage.contains("implausible"))
+    intercept[IllegalArgumentException](Snappy.uncompressBlock(bomb, 0, bomb.length))
   }
 
   test("block truncation sweep fails loudly, never an index error") {

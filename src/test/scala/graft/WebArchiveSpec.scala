@@ -189,6 +189,9 @@ class WebArchiveSpec extends SparkSpec {
     val bad = z.clone(); bad(bad.length - 1) = (bad(bad.length - 1) ^ 0x01).toByte
     val e1 = intercept[IllegalArgumentException](WebArchive.zlibInflate(bad))
     assert(e1.getMessage.contains("Adler"))
+    // HTTP policy: the Adler trailer is required, not just checked
+    val e3 = intercept[IllegalArgumentException](WebArchive.zlibInflate(z.dropRight(4)))
+    assert(e3.getMessage.contains("Adler"))
     // FDICT flag set -> rejected by name (0x78 0x20: FDICT bit on and
     // 0x7820 % 31 == 0, so FCHECK itself is valid)
     val fd = z.clone()

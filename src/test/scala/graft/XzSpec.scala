@@ -4,12 +4,12 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Xz
+import graft.operators.{Decompress, Xz}
 
-/** Cross-checked against the SYSTEM xz binary in both directions —
-  * the real tool's output exercises the full LZMA machinery (matches,
-  * reps, position slots, CRC64), ours exercises its container
-  * strictness. */
+/** Cross-checked against the SYSTEM xz binary and xz-java's encoder
+  * in both directions — their output exercises the full LZMA machinery
+  * (matches, reps, position slots, CRC64) through the xz-java decode
+  * path, ours exercises the container strictness of both. */
 class XzSpec extends AnyFunSuite {
 
   private def haveXz: Boolean =
@@ -76,6 +76,33 @@ class XzSpec extends AnyFunSuite {
     }
   }
 
+  /** `n` bytes of seeded Zipf-distributed words: non-repetitive text
+    * whose LZMA2 chunks carry real matches, literals and reps. */
+  private def zipfText(seed: Long, n: Int): Array[Byte] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = Array.fill(2000)(Array.fill(2 + rnd.nextInt(9))(('a' + rnd.nextInt(26)).toChar).mkString)
+    val cdf = vocab.indices.map(k => 1.0 / math.pow(k + 1, 1.07)).scanLeft(0.0)(_ + _).tail.toArray
+    val sb = new StringBuilder
+    while (sb.length < n) {
+      val i = java.util.Arrays.binarySearch(cdf, rnd.nextDouble() * cdf.last)
+      sb.append(vocab(if (i >= 0) i else -i - 1)).append(' ')
+    }
+    sb.toString.take(n).getBytes(UTF_8)
+  }
+
+  test("xz-java presets 0, 1 and 6 on non-repetitive text decode (LZMA chunk-size regression)") {
+    val raw = zipfText(7L, 3000)
+    for (preset <- Seq(0, 1, 6)) {
+      val bos = new java.io.ByteArrayOutputStream()
+      val xo = new org.tukaani.xz.XZOutputStream(bos, new org.tukaani.xz.LZMA2Options(preset))
+      xo.write(raw); xo.close()
+      val xz = bos.toByteArray
+      assert(Xz.decode(xz).sameElements(raw), s"Xz.decode failed at preset $preset")
+      val (fmt, out) = Decompress.auto(xz)
+      assert(fmt == "xz" && out.sameElements(raw), s"Decompress.auto failed at preset $preset")
+    }
+  }
+
   test("multi-stream concatenation decodes (xz cat layout)") {
     val a = "first ".getBytes(UTF_8)
     val b = "second".getBytes(UTF_8)
@@ -91,5 +118,13 @@ class XzSpec extends AnyFunSuite {
     val badPayload = good.clone(); badPayload(30) = (badPayload(30) ^ 0x40).toByte
     assertThrows[IllegalArgumentException](Xz.decode(badPayload))
     assertThrows[Exception](Xz.decode(good.dropRight(8)))
+    // a block header declaring a 1 GiB dictionary (byte 36), its CRC
+    // fixed up: over the decoder memory cap, typed instead of a 1 GiB
+    // allocation
+    val hugeDict = good.clone(); hugeDict(16) = 36
+    val crc = new java.util.zip.CRC32(); crc.update(hugeDict, 12, 8)
+    for (i <- 0 until 4) hugeDict(20 + i) = (crc.getValue >>> (8 * i)).toByte
+    val e = intercept[IllegalArgumentException](Xz.decode(hugeDict))
+    assert(e.getMessage.contains("memory"))
   }
 }
